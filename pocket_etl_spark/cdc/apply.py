@@ -23,19 +23,9 @@ from pyspark.sql import functions as F
 from pocket_etl_spark.cdc.evolution import EXTRAS_COL, PROMOTE_PREFIX, promote_extras
 from pocket_etl_spark.lake import MergeResult, ParquetLakeTable
 from pocket_etl_spark.profiling import Profiler
+from pocket_etl_spark.schema import dlq_records
 
 VALID_OPS = ("I", "U", "D")
-
-_DEBUG_TIMING = os.environ.get("SPARK_ETL_TIMING", "") not in ("", "0")
-
-
-def _tick(label: str, t0: float) -> float:
-    """Phase-timing observability (enable with SPARK_ETL_TIMING=1)."""
-    t1 = time.time()
-    if _DEBUG_TIMING:
-        print(f"TIMING {label}={t1 - t0:.2f}s", flush=True)
-    return t1
-
 
 @dataclass
 class ApplyResult:
@@ -120,15 +110,7 @@ def write_dlq(
             "validation: null key/lsn or bad op (payload redacted; "
             "apply_batch dlq_payload='full' opts in)"
         )
-    (
-        bad.select(
-            F.lit(batch_id).cast("long").alias("batch_id"),
-            F.lit(stage).alias("stage"),
-            error.alias("error"),
-            body.alias("payload"),
-            F.current_timestamp().alias("ts"),
-        ).write.mode("append").parquet(dlq_path)
-    )
+    dlq_records(bad, batch_id, stage, error, body).write.mode("append").parquet(dlq_path)
 
 
 def apply_batch(
@@ -171,8 +153,6 @@ def apply_batch(
     with prof.scope("dlq_split"):
         good, bad = split_invalid(events, table)
     want_dlq = dlq_path is not None
-
-    t1 = _tick("dlq_split", t0)
 
     # Cache the batch only when the upstream is not cheaply replayable: the
     # merge reads the payload twice (winner-ord aggregate + probe side), and a
@@ -233,7 +213,6 @@ def apply_batch(
         touched = sorted(stats["_buckets"])
         promo_keys = sorted(stats["_promo"]) if EXTRAS_COL in good.columns else []
     rows_bad = int(stats["_bad"] or 0) if want_dlq else 0
-    t1 = _tick("batch_stats", t1)
 
     if rows_bad:
         with prof.scope("dlq_write"):
@@ -247,10 +226,9 @@ def apply_batch(
     good = promote_extras(good, keys=promo_keys)
     payload = good.drop(*[c for c in drop_cols if c in good.columns])
 
-    # The batch goes to the merge un-deduped: the lake's union-argmax subsumes
-    # per-batch LWW dedupe in the same hash-aggregate (one shuffle total), so a
-    # separate lww_dedupe pass would only add a redundant shuffle. lww_dedupe
-    # remains the standalone operator for non-merge consumers.
+    # The batch goes to the merge un-deduped: the merge runs lww_dedupe once
+    # over (current ∪ batch), which subsumes per-batch LWW dedupe (argmax is
+    # associative), so a separate pass here would only repeat its shuffles.
     rows_applied, rows_in, hot = -1, -1, []
     try:
         if lineage:
@@ -283,12 +261,10 @@ def apply_batch(
             finally:
                 grouped.unpersist()
                 prof_ls.__exit__(None, None, None)
-            t1 = _tick("lineage_stats", t1)
         with prof.scope("merge"):
             result = table.merge(
                 payload, batch_id=batch_id, query_id=query_id, touched_buckets=touched
             )
-        t1 = _tick("merge", t1)
 
         lineage_path = None
         if lineage:

@@ -5,20 +5,23 @@ staged rows (RedshiftJdbcClient.java:279-291); within a batch the last write to 
 wins implicitly. We refine that to an explicit, deterministic per-event rule:
 winner(key) = argmax over (lsn, op_rank) — op_rank breaks same-LSN ties as D > U > I.
 
-Scale design — why groupBy/max_by and not a window:
+One argmax plan serves every caller (the parquet merge, the Iceberg pre-MERGE
+dedupe, standalone use): the ordering packs into ONE long ordinal, its per-key
+max is a plain HashAggregate, and a join on (key, ordinal) recovers the winning
+rows. Why not a window or ``max_by``:
 
 - ``row_number() OVER (PARTITION BY key ORDER BY lsn DESC)`` shuffles EVERY row of a
   key to one reducer: a hot key (50% of a 10^10-event log) lands 5·10^9 rows on one
   task. That plan melts at scale.
-- ``groupBy(key).agg(max_by(payload, ord))`` is a commutative-associative aggregate:
-  Spark performs map-side partial aggregation, so each input partition first collapses
-  its local rows per key to ONE row, and only those partials shuffle. The hot key
-  contributes at most one row per upstream partition — skew is absorbed before the
-  exchange. This is the same trick as the reference's per-thread buffering
-  (ParallelLoader.java:156-167), done by Tungsten's hash aggregate.
-
-An explicit two-phase salted variant is provided for completeness and for plans where
-a window is genuinely required (e.g. top-N per key with N>1); bench compares them.
+- ``groupBy(key).max(_ord)`` is commutative-associative over a fixed-width long:
+  whole-stage codegen plus map-side partial aggregation, so each input partition
+  first collapses its local rows per key to ONE row, and only those partials
+  shuffle. The hot key contributes at most one row per upstream partition — skew is
+  absorbed before the exchange. This is the same trick as the reference's
+  per-thread buffering (ParallelLoader.java:156-167), done by Tungsten's hash
+  aggregate. ``max_by(struct_payload, ord)`` would drag the full row payload
+  through a SortAggregate instead, which profiling showed dominated merge time and
+  scaled poorly past 8 threads.
 """
 
 from __future__ import annotations
@@ -44,43 +47,34 @@ def lww_dedupe(
     key_cols: list[str],
     lsn_col: str = LSN_COL,
     op_col: str = OP_COL,
+    src_col: str | None = None,
 ) -> DataFrame:
-    """One row per key: the event with max (lsn, op_rank).
+    """One row per key: the row with max (lsn, op_rank[, src]); columns unchanged.
 
-    Single hash-aggregate; map-side combine makes it skew-proof (see module doc).
+    The ordering packs into one long, ``lsn*8 + op_rank*2 + src`` (op_rank ∈
+    0..3, src ∈ 0..1; lsn < 2^60 by contract). ``src_col`` is the merge's
+    incoming-beats-current rank: at equal (lsn, op) the row with src 1 wins, so
+    replaying a batch is idempotent. The per-key max is a HashAggregate (see
+    module doc); a shuffled hash join on (key, ordinal) recovers the winning
+    rows with no driver-side work (broadcasting the winner set was measured
+    to cost ~6-10 s/batch of serial driver collect, flattening N→4N scaling).
+
+    Exact-duplicate guard: at-least-once delivery can land the SAME event
+    (key, lsn, op) twice; both rows tie at the max ordinal and the join would
+    emit both. ``dropDuplicates`` on (key, ordinal) collapses them — the join
+    output is already hash-partitioned on exactly those columns, so this is a
+    partition-local aggregate, no extra exchange.
     """
-    payload = [c for c in df.columns if c not in key_cols]
-    ord_expr = F.struct(F.col(lsn_col), OP_RANK_EXPR(op_col))
+    ord_expr = F.col(lsn_col) * 8 + OP_RANK_EXPR(op_col) * 2
+    if src_col is not None:
+        ord_expr = ord_expr + F.col(src_col)
+    keyed = df.withColumn("_ord", ord_expr)
+    winner_ords = keyed.groupBy(*key_cols).agg(F.max("_ord").alias("_ord"))
     return (
-        df.groupBy(*key_cols)
-        .agg(F.max_by(F.struct(*payload), ord_expr).alias("_w"))
-        .select(*key_cols, "_w.*")
+        keyed.join(winner_ords.hint("shuffle_hash"), on=[*key_cols, "_ord"], how="inner")
+        .dropDuplicates([*key_cols, "_ord"])
+        .drop("_ord")
     )
-
-
-def lww_dedupe_salted(
-    df: DataFrame,
-    key_cols: list[str],
-    lsn_col: str = LSN_COL,
-    op_col: str = OP_COL,
-    num_salts: int = 16,
-) -> DataFrame:
-    """Explicit two-phase salted dedupe (SURVEY.md §4.2.2).
-
-    Phase 1 groups by (key, salt) — a hot key's rows spread across ``num_salts``
-    reducers; phase 2 reduces the ≤num_salts survivors per key to the global winner.
-    Result is identical to lww_dedupe (argmax is associative); kept as the explicit
-    skew-split demonstration and for window-shaped plans AQE can't rescue.
-    """
-    payload = [c for c in df.columns if c not in key_cols]
-    ord_expr = F.struct(F.col(lsn_col), OP_RANK_EXPR(op_col))
-    salted = df.withColumn("_salt", F.pmod(F.xxhash64(F.col(lsn_col)), F.lit(num_salts)))
-    phase1 = (
-        salted.groupBy(*key_cols, "_salt")
-        .agg(F.max_by(F.struct(*payload), ord_expr).alias("_w"))
-        .select(*key_cols, "_w.*")
-    )
-    return lww_dedupe(phase1, key_cols, lsn_col=lsn_col, op_col=op_col)
 
 
 def lww_dedupe_window(
@@ -89,9 +83,9 @@ def lww_dedupe_window(
     lsn_col: str = LSN_COL,
     op_col: str = OP_COL,
 ) -> DataFrame:
-    """Window-function formulation (row_number = 1). Same result; shuffles whole keys
-    to single reducers, so it is the NON-scale path — used as a correctness
-    cross-check in tests and as the bench's skew counter-example."""
+    """Window-function formulation (row_number = 1). Same winners; shuffles whole
+    keys to single reducers, so it is the NON-scale path — kept only as the
+    reference implementation the tests compare ``lww_dedupe`` against."""
     w = Window.partitionBy(*key_cols).orderBy(
         F.col(lsn_col).desc(), OP_RANK_EXPR(op_col).desc()
     )
@@ -104,7 +98,7 @@ def detect_hot_keys(
     df: DataFrame, key_cols: list[str], threshold_fraction: float = 0.05, max_keys: int = 32
 ) -> list[tuple]:
     """Per-batch hot-key histogram: keys holding more than ``threshold_fraction`` of
-    the batch. Used for lineage/metrics and to pick salting for window-shaped plans.
+    the batch. Used for lineage/metrics.
     One aggregate pass; cheap relative to the merge itself."""
     total = df.count()
     if total == 0:

@@ -141,6 +141,9 @@ def redrive(
     # a non-deterministic fix() could pass the guard on one evaluation while
     # producing an invalid row on the merge's — which split_invalid would then
     # drop under a committed watermark (DLQ selections are small by nature).
+    # persist() is best-effort under normal execution: cache eviction or a task
+    # retry recomputes the lineage and re-runs fix(), so the hazard is reduced,
+    # not eliminated.
     persisted = events.persist()
     events = persisted
     last = table.last_batch_id(query_id)

@@ -109,6 +109,34 @@ def with_schema_evolution(events: DataFrame, from_lsn: int, key: str = "new_col_
     )
 
 
+def with_duplicates_and_ties(events: DataFrame) -> DataFrame:
+    """Add the two same-LSN collisions the LWW rule must resolve:
+
+    - same-LSN op ties: at every lsn divisible by 11 the key also gets the two
+      other ops (all of I, U, D at one LSN → D wins); at lsn divisible by 13
+      (and not 11) an I/U event gets its I/U counterpart (→ U wins). Tie rows
+      carry their own content, so a wrong winner shows in the result;
+    - exact duplicates (at-least-once redelivery): every row at lsn divisible
+      by 7, tie rows included, appears twice."""
+
+    def as_op(df: DataFrame, op) -> DataFrame:
+        tie = df.withColumn("op", op).withColumn("content", F.concat(F.lit("tie-"), "op"))
+        for c in ("commit", "lang", "content"):  # null on D, as in the log
+            tie = tie.withColumn(c, F.when(F.col("op") != "D", F.col(c)))
+        return tie.select(*events.columns)
+
+    ops = events.sparkSession.createDataFrame([("I",), ("U",), ("D",)], "_tie_op string")
+    triples = as_op(
+        events.filter("lsn % 11 = 0").crossJoin(ops).filter("_tie_op <> op"), F.col("_tie_op")
+    )
+    pairs = as_op(
+        events.filter("lsn % 13 = 0 AND lsn % 11 <> 0 AND op <> 'D'"),
+        F.when(F.col("op") == "I", "U").otherwise("I"),
+    )
+    tied = events.unionByName(triples).unionByName(pairs)
+    return tied.unionByName(tied.filter("lsn % 7 = 0"))
+
+
 def oracle_apply_pandas(events_pdf: pd.DataFrame, initial: pd.DataFrame | None = None) -> pd.DataFrame:
     """Naive single-pass LWW oracle: apply events in LSN order onto a dict keyed by
     (repo, path). Ground truth for replay-equivalence tests (SURVEY.md §5) — mirrors

@@ -178,8 +178,8 @@ def q_json_extract(spark, sf):
 
 def q_window_topk_per_group(spark, sf):
     """Top-3 orders by totalprice per priority — window row_number. Scale note:
-    per-group top-k via window shuffles whole groups; for huge groups prefer the
-    two-phase groupBy/max_by family (see cdc/dedupe.py). Kept as the window-op
+    per-group top-k via window shuffles whole groups; for huge groups prefer a
+    per-key aggregate with map-side combine (see cdc/dedupe.py). Kept as the window-op
     representative with a unique tie-break key."""
     o = t(spark, sf, "orders")
     w = Window.partitionBy("o_orderpriority").orderBy(
@@ -375,7 +375,8 @@ def q_pg_array_parse(spark, sf):
 
 def q_cdc_lww_dedupe(spark, sf):
     """THE core CDC operator: per-key last-writer-wins (key=user_id, lsn=event_id).
-    groupBy/max_by → map-side partial agg → skew-proof (cdc/dedupe.py)."""
+    groupBy/max_by → map-side partial agg → skew-proof (the engine's merge uses
+    the packed-long argmax of cdc/dedupe.lww_dedupe)."""
     e = t(spark, sf, "events")
     return (
         e.groupBy("user_id")
@@ -388,20 +389,6 @@ def q_cdc_lww_dedupe(spark, sf):
             F.col("_w.value").alias("last_value"),
             F.col("_w.event_id").alias("last_event_id"),
         )
-    )
-
-
-def q_cdc_lww_salted(spark, sf):
-    """The explicit two-phase SALTED dedupe (cdc/dedupe.lww_dedupe_salted,
-    SURVEY.md §4.2.2) — must produce byte-identical winners to the plain
-    hash-aggregate form; registered separately so the skew path itself is
-    oracle-checked. event_type plays the op role (no I/U/D → rank 0 for all;
-    unique event_id makes the argmax deterministic)."""
-    from pocket_etl_spark.cdc.dedupe import lww_dedupe_salted
-
-    e = t(spark, sf, "events").select("user_id", "event_type", "value", "event_id")
-    return lww_dedupe_salted(
-        e, ["user_id"], lsn_col="event_id", op_col="event_type", num_salts=8
     )
 
 
@@ -940,12 +927,6 @@ ORACLE_SQL: dict[str, str] = {
                    row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
             FROM events) WHERE rn = 1
     """,
-    "cdc_lww_salted": """
-        SELECT user_id, event_type, value, event_id FROM (
-            SELECT user_id, event_type, value, event_id,
-                   row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-            FROM events) WHERE rn = 1
-    """,
     "cdc_apply_upsert": """
         SELECT user_id, last_type, last_value, last_event_id FROM (
             SELECT user_id, event_type AS last_type, value AS last_value, event_id AS last_event_id,
@@ -1088,7 +1069,6 @@ QUERIES = {
     "pg_array_parse": q_pg_array_parse,
     "sessionize": q_sessionize,
     "cdc_lww_dedupe": q_cdc_lww_dedupe,
-    "cdc_lww_salted": q_cdc_lww_salted,
     "cdc_apply_upsert": q_cdc_apply_upsert,
     "cdc_op_counts": q_cdc_op_counts,
     "cdc_change_feed": q_cdc_change_feed,

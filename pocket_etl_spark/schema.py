@@ -10,6 +10,8 @@ fields tunnel through the map, and schema evolution promotes tunnel keys to real
 
 from __future__ import annotations
 
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # Ops carried by the change log. Tie-break rank makes same-LSN collisions
@@ -66,6 +68,27 @@ DLQ_SCHEMA = T.StructType(
         T.StructField("ts", T.TimestampType(), nullable=True),
     ]
 )
+
+
+def dlq_records(
+    df: DataFrame, batch_id: int | None, stage: str, error: Column, payload: Column
+) -> DataFrame:
+    """One ``DLQ_SCHEMA`` record per row of ``df``, stamped with the write time.
+
+    Every DLQ writer — the tail/apply split (cdc/apply.write_dlq), the fluent
+    ``EtlStream.run`` and ``RowSinkLoader`` — builds its rows here, so
+    cdc/redrive.read_dlq consumes any of them."""
+    values = {
+        "batch_id": F.lit(batch_id),
+        "stage": F.lit(stage),
+        "error": error,
+        "payload": payload,
+        "ts": F.current_timestamp(),
+    }
+    return df.select(
+        *[values[f.name].cast(f.dataType).alias(f.name) for f in DLQ_SCHEMA.fields]
+    )
+
 
 # Numeric widening lattice for schema evolution (kept deliberately small; anything
 # outside the lattice falls back to string).

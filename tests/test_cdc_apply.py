@@ -6,7 +6,12 @@ invariant. Mirrors the reference's order-insensitive golden assertions
 import pandas as pd
 
 from pocket_etl_spark.cdc.apply import apply_batch
-from pocket_etl_spark.datagen import content_sha256, gen_change_events, oracle_apply_pandas
+from pocket_etl_spark.datagen import (
+    content_sha256,
+    gen_change_events,
+    oracle_apply_pandas,
+    with_duplicates_and_ties,
+)
 from pocket_etl_spark.lake import ParquetLakeTable
 
 
@@ -129,15 +134,17 @@ def test_null_op_rows_route_to_dlq_not_lost(spark, tmp_table_path, tmp_path):
     assert_state_equals_oracle(table, good_pdf)
 
 
-def test_sortagg_fallback_matches_oracle(spark, tmp_table_path):
-    """argmax_strategy="sortagg" (the max_by fallback for winner sets too large to
-    broadcast) must produce the exact same table state as the broadcast path."""
-    events = gen_change_events(spark, n_events=3000, n_keys=300, seed=21)
-    table = ParquetLakeTable(
-        spark, tmp_table_path, num_buckets=8, argmax_strategy="sortagg"
+def test_duplicates_and_same_lsn_ties_match_oracle(spark, tmp_table_path):
+    """Exact duplicate (key, lsn, op) events (at-least-once redelivery) and
+    same-LSN I/U/D ties, applied in two batches: the state must equal the
+    oracle — one row per key, D > U > I at equal LSN."""
+    events = with_duplicates_and_ties(
+        gen_change_events(spark, n_events=3000, n_keys=300, seed=21)
     )
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=8)
     for i, (lo, hi) in enumerate([(1, 1500), (1501, 3000)]):
         apply_batch(events.filter(f"lsn between {lo} and {hi}"), table, batch_id=i, lineage=False)
+    assert table.read().groupBy("repo", "path").count().filter("count > 1").count() == 0
     assert_state_equals_oracle(table, events.toPandas())
 
 

@@ -389,6 +389,35 @@ def test_row_sink_loader_routes_record_failures_to_dlq(spark, tmp_path):
     assert "p4" not in dlq_rows[0]["payload"]
 
 
+def test_every_dlq_writer_emits_dlq_schema(spark, tmp_path):
+    """The three DLQ writers — the apply split (write_dlq), EtlStream.run and
+    RowSinkLoader — each write records whose field names and types equal
+    DLQ_SCHEMA, so cdc/redrive.read_dlq reads any of them."""
+    from pocket_etl_spark.cdc.apply import write_dlq
+    from pocket_etl_spark.schema import DLQ_SCHEMA
+
+    def fail_on_3(pdf):
+        if (pdf["score"] == 3).any():
+            raise ValueError("boom on 3")
+        return pdf
+
+    def put_item(rec):
+        if rec["score"] == 4:
+            raise ValueError("conditional check failed on 4")
+
+    dlqs = {w: str(tmp_path / w) for w in ("apply", "stream", "sink")}
+    write_dlq(_src(spark).filter("score = 3"), dlqs["apply"], batch_id=7)
+    EtlStream.extract(_src(spark).repartition(1)).map_rows(fail_on_3).load(
+        BufferLoader()
+    ).run(spark, dlq_path=dlqs["stream"])
+    EtlStream.extract(_src(spark)).load(RowSinkLoader(put_item, dlq_path=dlqs["sink"])).run(spark)
+    want = [(f.name, f.dataType) for f in DLQ_SCHEMA.fields]
+    for writer, path in dlqs.items():
+        got = spark.read.parquet(path)
+        assert got.count() == 1, writer
+        assert [(f.name, f.dataType) for f in got.schema.fields] == want, writer
+
+
 def test_row_sink_loader_dlq_full_payload_opt_in(spark, tmp_path):
     """with_object_logger('full') opts the SINK DLQ into whole-record payloads
     too (required for redrive), matching EtlStream.run's policy."""

@@ -171,20 +171,17 @@ def test_exact_duplicate_events_keep_one_row_per_key(spark, tmp_table_path):
         {"lsn": 10, "op": "I", "repo": "r", "path": "p", "commit": "c1", "lang": "py", "content": "v1"},
         {"lsn": 5, "op": "I", "repo": "r", "path": "q", "commit": "c0", "lang": "py", "content": "w0"},
     ]
-    for strategy in ("shuffle", "broadcast", "sortagg"):
-        table = ParquetLakeTable(
-            spark, f"{tmp_table_path}_{strategy}", num_buckets=2, argmax_strategy=strategy
-        )
-        table.merge(spark.createDataFrame(dup, schema), batch_id=0)
-        got = table.read()
-        assert got.count() == 2, strategy
-        assert got.groupBy("repo", "path").count().filter("count > 1").count() == 0, strategy
-        # the duplicated key's row must not multiply on the NEXT merge either
-        more = [{"lsn": 20, "op": "U", "repo": "r", "path": "q", "commit": "c2", "lang": "py", "content": "w2"}]
-        table.merge(spark.createDataFrame(more, schema), batch_id=1)
-        got = table.read()
-        assert got.count() == 2, strategy
-        assert got.groupBy("repo", "path").count().filter("count > 1").count() == 0, strategy
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=2)
+    table.merge(spark.createDataFrame(dup, schema), batch_id=0)
+    got = table.read()
+    assert got.count() == 2
+    assert got.groupBy("repo", "path").count().filter("count > 1").count() == 0
+    # the duplicated key's row must not multiply on the NEXT merge either
+    more = [{"lsn": 20, "op": "U", "repo": "r", "path": "q", "commit": "c2", "lang": "py", "content": "w2"}]
+    table.merge(spark.createDataFrame(more, schema), batch_id=1)
+    got = table.read()
+    assert got.count() == 2
+    assert got.groupBy("repo", "path").count().filter("count > 1").count() == 0
 
 
 def test_merge_into_sql_shape():

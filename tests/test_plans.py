@@ -50,17 +50,27 @@ def test_range_join_is_broadcast_not_cartesian(spark):
     assert "CartesianProduct" not in f.text, f.text
 
 
-def test_lww_dedupe_single_exchange(spark):
-    """The CDC dedupe is ONE key shuffle with map-side partial aggregation —
-    the skew-absorption property the whole merge design rests on."""
+def test_lww_dedupe_packed_argmax_plan(spark):
+    """The one LWW argmax plan (standalone dedupe, Iceberg pre-MERGE dedupe and
+    the parquet merge): packed-long max as partial + final HashAggregate
+    (map-side combine absorbs hot keys before the exchange), a shuffled hash
+    winner join, and the exact-duplicate collapse as a partition-local
+    aggregate on the join's output — three exchanges, no max_by."""
     from pocket_etl_spark.cdc.dedupe import lww_dedupe
     from pocket_etl_spark.datagen import gen_change_events
 
     ev = gen_change_events(spark, 1000, 50, seed=3)
     f = plan_facts(lww_dedupe(ev, ["repo", "path"]))
-    assert f.exchanges == 1, f.text
-    # partial_max_by before the exchange (any aggregate strategy), final after
-    assert "partial_max_by" in f.text, f.text
+    assert f.exchanges == 3, f.text
+    assert f.hash_aggregates == 2, f.text
+    assert "ShuffledHashJoin" in f.text, f.text
+    assert f.broadcast_joins == 0 and f.sortmerge_joins == 0, f.text
+    assert "max_by" not in f.text, f.text
+    # the tie-collapse: two SortAggregates, both above every exchange in the tree
+    tree = f.text.split("\n\n")[0].splitlines()
+    sort_aggs = [i for i, line in enumerate(tree) if "SortAggregate" in line]
+    exchanges = [i for i, line in enumerate(tree) if "Exchange" in line]
+    assert len(sort_aggs) == 2 and max(sort_aggs) < min(exchanges), f.text
 
 
 def test_fanout_explode_no_shuffle(spark):
