@@ -120,8 +120,6 @@ def apply_batch(
     query_id: str = "default",
     dlq_path: str | None = None,
     lineage: bool = True,
-    drop_cols: tuple[str, ...] = ("ts", "extras"),
-    cache: bool = True,
     dlq_keys: tuple[str, ...] = (),
     dlq_payload: str = "redacted",
 ) -> ApplyResult:
@@ -154,16 +152,14 @@ def apply_batch(
         good, bad = split_invalid(events, table)
     want_dlq = dlq_path is not None
 
-    # Cache the batch only when the upstream is not cheaply replayable: the
-    # merge reads the payload twice (winner-ord aggregate + probe side), and a
-    # non-deterministic source would diverge between reads. For file-backed
-    # batches (the streaming tail's micro-batches, replay from a staged WAL)
-    # re-reading the pruned parquet scan is cheaper than paying the columnar
-    # cache write of the full batch. The persist MUST happen before the stats
-    # pass below: if the stats pass ran against the uncached frame, a
-    # non-deterministic upstream could hand the merge keys whose bucket never
-    # entered touched_buckets — the merge would then write a bucket the
-    # manifest loop never registers, silently dropping the update.
+    # The batch is persisted before anything reads it. The merge reads it
+    # twice (winner-ord aggregate + probe side), and a non-deterministic
+    # upstream must be materialized BEFORE the stats pass below: if the stats
+    # pass ran against an unmaterialized frame, the merge could see keys whose
+    # bucket never entered touched_buckets — it would write a bucket the
+    # manifest never registers, silently dropping the update. (A file-backed
+    # batch could skip the cache; on a 2M-event replay it measured +27% —
+    # ROADMAP direction 5 keeps that open.)
     #
     # With a DLQ configured, the cached frame is the FULL batch tagged with
     # the validity flag: the bad-row count folds into the single stats pass
@@ -171,28 +167,22 @@ def apply_batch(
     # dlq_path set — VERDICT r3 'wrong' #3), and a nonzero DLQ write reads the
     # cache, never the upstream.
     if want_dlq:
-        tagged = events.withColumn("_valid", valid_condition(events, table))
-        stats_src = tagged.persist() if cache else tagged
-        good = stats_src.filter(F.col("_valid")).drop("_valid")
+        cached = events.withColumn("_valid", valid_condition(events, table)).persist()
+        good = cached.filter(F.col("_valid")).drop("_valid")
         if "_raw_value" in good.columns:
             good = good.drop("_raw_value")
-        bad = stats_src.filter(~F.col("_valid")).drop("_valid")
-        cached = stats_src  # unpersist handle
+        bad = cached.filter(~F.col("_valid")).drop("_valid")
         valid = F.col("_valid")
     else:
-        cached = good.persist() if cache else good
-        good = cached
-        stats_src = cached
+        cached = good = good.persist()
         valid = F.lit(True)
 
     # ONE stats pass over the batch computes everything the driver needs
     # before the merge: the set of touched hash buckets (merge reads and
     # rewrites only those), the distinct promotable tunnel keys (schema
     # evolution), and — when a DLQ is configured — the invalid-row count.
-    # When cache=False (deterministic file-backed batch) column pruning
-    # reaches the source scan — only key columns, lsn/op and the extras map
-    # are read; when cache=True this pass also populates the cache so every
-    # later consumer reads the same materialization.
+    # This pass also populates the cache, so every later consumer reads the
+    # same materialization.
     sel = [F.when(valid, table._bucket_expr()).alias("_b")]
     aggs = [F.collect_set("_b").alias("_buckets")]
     if want_dlq:
@@ -209,7 +199,7 @@ def apply_batch(
         )
         aggs.append(F.array_distinct(F.flatten(F.collect_set("_pk"))).alias("_promo"))
     with prof.scope("batch_stats"):
-        stats = stats_src.select(*sel).agg(*aggs).collect()[0]
+        stats = cached.select(*sel).agg(*aggs).collect()[0]
         touched = sorted(stats["_buckets"])
         promo_keys = sorted(stats["_promo"]) if EXTRAS_COL in good.columns else []
     rows_bad = int(stats["_bad"] or 0) if want_dlq else 0
@@ -224,7 +214,8 @@ def apply_batch(
     # Schema evolution: lift tunnel fields (extras map "new_col_*") to columns
     # before the merge widens the table schema.
     good = promote_extras(good, keys=promo_keys)
-    payload = good.drop(*[c for c in drop_cols if c in good.columns])
+    # the event timestamp and the (now promoted) extras map are not table columns
+    payload = good.drop(*[c for c in ("ts", "extras") if c in good.columns])
 
     # The batch goes to the merge un-deduped: the merge runs lww_dedupe once
     # over (current ∪ batch), which subsumes per-batch LWW dedupe (argmax is
@@ -236,9 +227,7 @@ def apply_batch(
             prof_ls.__enter__()
             # ONE upstream pass for all lineage stats: group once per key,
             # cache the (small) per-key histogram, derive row count, distinct
-            # keys (= merge winners) and the hot-key top-32 from it (the old
-            # path executed the upstream 4x: count, distinct, and
-            # detect_hot_keys' count + groupBy).
+            # keys (= merge winners) and the hot-key top-32 from it.
             grouped = (
                 payload.groupBy(*table.key_cols)
                 .agg(F.count(F.lit(1)).alias("_n"))
@@ -274,8 +263,7 @@ def apply_batch(
                     rows_bad, timings=prof.flat(),
                 )
     finally:
-        if cache:
-            cached.unpersist()
+        cached.unpersist()
     return ApplyResult(
         merge=result,
         rows_in=rows_in,

@@ -92,24 +92,3 @@ def lww_dedupe_window(
     return (
         df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
     )
-
-
-def detect_hot_keys(
-    df: DataFrame, key_cols: list[str], threshold_fraction: float = 0.05, max_keys: int = 32
-) -> list[tuple]:
-    """Per-batch hot-key histogram: keys holding more than ``threshold_fraction`` of
-    the batch. Used for lineage/metrics.
-    One aggregate pass; cheap relative to the merge itself."""
-    total = df.count()
-    if total == 0:
-        return []
-    cutoff = max(1, int(total * threshold_fraction))
-    rows = (
-        df.groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > cutoff)
-        .orderBy(F.col("_n").desc())
-        .limit(max_keys)
-        .collect()
-    )
-    return [tuple(r[k] for k in key_cols) for r in rows]

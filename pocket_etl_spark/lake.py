@@ -81,8 +81,6 @@ class ParquetLakeTable:
         op_col: str = OP_COL,
         schema: T.StructType | None = None,
         num_buckets: int = 16,
-        files_per_bucket: int | str = "auto",
-        stamps: bool = True,
     ) -> None:
         self.spark = spark
         self.path = path
@@ -90,17 +88,6 @@ class ParquetLakeTable:
         self.lsn_col = lsn_col
         self.op_col = op_col
         self.num_buckets = num_buckets
-        # Write parallelism above the touched-bucket count: a batch touching
-        # few buckets (worst case: one hot bucket) would otherwise serialize
-        # the whole rewrite on len(touched) writer tasks. "auto" splits each
-        # bucket into enough file slices to keep every core writing when
-        # touched < parallelism (capped at 8 slices to bound file counts).
-        self.files_per_bucket = files_per_bucket
-        # Change-feed stamps: per-row _version costs one long through the
-        # merge's union, winner join, and write (~3-4% of replay wall, measured
-        # in BENCH/BASELINE.md §stamp-cost). Tables nobody tails can turn it
-        # off; read_changes then refuses rather than returning wrong windows.
-        self.stamps = stamps
         self._base_schema = schema or TABLE_SCHEMA
         os.makedirs(os.path.join(path, _MANIFESTS), exist_ok=True)
         os.makedirs(os.path.join(path, _DATA), exist_ok=True)
@@ -215,11 +202,6 @@ class ParquetLakeTable:
         carried through the copy-on-write rewrite — an unchanged key is never
         emitted, and a late lower-LSN event that LOST its merge produces no
         change row (the stored winner keeps its original stamp)."""
-        if not self.stamps:
-            raise ValueError(
-                "read_changes requires stamps=True (this table was opened with "
-                "stamps=False, so rows carry no _version change-feed stamp)"
-            )
         # INVARIANT (pinned by test_lake.test_read_changes_window_is_stable):
         # the window's upper bound and BOTH manifests resolve EAGERLY, here at
         # call time — never lazily inside the returned plan. A merge committing
@@ -254,8 +236,8 @@ class ParquetLakeTable:
             int(b) for b, rel in to_man.items() if since_man.get(b) != rel
         ]
         df = self.read(version=to_v, buckets=changed, include_tombstones=True)
-        # Plain comparison, NOT coalesce(_version, 0): every row a stamped
-        # table stores carries a non-null _version (merge coalesces, overwrite
+        # Plain comparison, NOT coalesce(_version, 0): every row the table
+        # stores carries a non-null _version (merge coalesces, overwrite
         # stamps, compact preserves), and a bare predicate reaches the parquet
         # scan as PushedFilters [IsNotNull(_version), GreaterThan(_version, N)]
         # — rowgroup min/max stats then skip carried-forward cold rows inside
@@ -338,14 +320,10 @@ class ParquetLakeTable:
             )
         if not touched:
             # Still advance the watermark so the empty batch is fenced on replay.
-            new_man = dict(man)
-            new_man["version"] = cur_version + 1
-            new_man["parent"] = cur_version  # keep the manifest chain contiguous
-            new_man["watermarks"] = {**man["watermarks"]}
-            if batch_id is not None:
-                new_man["watermarks"][query_id] = batch_id
-            self._commit(new_man)
-            return MergeResult(True, cur_version + 1, batch_id, [], {"rows": 0})
+            version = self._commit_snapshot(
+                man, {}, [], {"committed_at": time.time()}, batch_id, query_id
+            )
+            return MergeResult(True, version, batch_id, [], {"rows": 0})
 
         current = conform_to(
             self.read(version=cur_version, buckets=touched, include_tombstones=True),
@@ -367,130 +345,143 @@ class ParquetLakeTable:
         # for incoming events; after winner selection NULL coalesces to the new
         # commit version — so a row's stamp moves iff an incoming event won
         # (the change-feed contract of read_changes).
-        stamp_cols = ["_version"] if self.stamps else []
         cur_tagged = current.select(
             *data_cols,
             F.when(F.coalesce(F.col("_deleted"), F.lit(False)), F.lit("D"))
             .otherwise(F.lit(None).cast("string"))
             .alias(self.op_col),
             F.lit(0).alias("_src"),
-            *[F.col(c) for c in stamp_cols],
+            F.col("_version"),
         )
         upd_tagged = winners.select(
             *data_cols, F.col(self.op_col), F.lit(1).alias("_src"),
-            *[F.lit(None).cast("long").alias(c) for c in stamp_cols],
+            F.lit(None).cast("long").alias("_version"),
         )
         combined = cur_tagged.unionByName(upd_tagged)
 
-        merged = lww_dedupe(
-            combined, self.key_cols, lsn_col=self.lsn_col, op_col=self.op_col,
-            src_col="_src",
-        ).select(*data_cols, self.op_col, *stamp_cols)
-        merged = merged.withColumn("_deleted", F.col(self.op_col) == "D")
-        if self.stamps:
-            merged = merged.withColumn(
-                "_version", F.coalesce(F.col("_version"), F.lit(new_version))
+        merged = (
+            lww_dedupe(
+                combined, self.key_cols, lsn_col=self.lsn_col, op_col=self.op_col,
+                src_col="_src",
             )
-        merged = merged.drop(self.op_col).withColumn("_bucket", self._bucket_expr())
+            .select(*data_cols, self.op_col, "_version")
+            .withColumn("_deleted", F.col(self.op_col) == "D")
+            .withColumn("_version", F.coalesce(F.col("_version"), F.lit(new_version)))
+            .drop(self.op_col)
+            .withColumn("_bucket", self._bucket_expr())
+        )
 
-        # Write only the touched buckets of the new snapshot. Writer
-        # parallelism = touched buckets x file slices: when a batch touches
-        # fewer buckets than there are cores (the hot-bucket case), each bucket
-        # splits into ``slices`` files so the rewrite stays core-parallel
-        # instead of serializing on one task per bucket.
-        rel_dir = os.path.join(_DATA, f"v{new_version:012d}")
-        out_dir = os.path.join(self.path, rel_dir)
-        if self.files_per_bucket == "auto":
-            par = self.spark.sparkContext.defaultParallelism
-            slices = max(1, min(8, par // max(len(touched), 1)))
-        else:
-            slices = max(1, int(self.files_per_bucket))
-        if slices > 1:
-            writer = (
-                merged.withColumn(
-                    "_slice",
-                    F.pmod(F.xxhash64(F.lit("_slice"), *self.key_cols), F.lit(slices)),
-                )
-                .repartition(len(touched) * slices, "_bucket", "_slice")
-                .drop("_slice")
-            )
-        else:
-            writer = merged.repartition(max(len(touched), 1), "_bucket")
-        writer.write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
-
-        # New manifest: rewritten buckets point at the new snapshot dir; untouched
-        # buckets carry forward by reference. A touched bucket that lost all rows
-        # (all deleted) is dropped.
-        new_buckets = dict(man["buckets"])
-        written = {
-            int(d.split("=", 1)[1])
-            for d in os.listdir(out_dir)
-            if d.startswith("_bucket=")
-        }
-        for b in touched:
-            key = str(b)
-            if b in written:
-                new_buckets[key] = os.path.join(rel_dir, f"_bucket={b}")
-            else:
-                new_buckets.pop(key, None)
-
-        new_man = {
-            "version": new_version,
-            "parent": cur_version,
-            "schema": new_schema.json(),
-            "buckets": new_buckets,
-            "watermarks": {**man["watermarks"]},
-            "stats": {"committed_at": time.time()},
-        }
-        if batch_id is not None:
-            new_man["watermarks"][query_id] = batch_id
-        self._commit(new_man)
+        # Writer parallelism = touched buckets x file slices: when a batch
+        # touches fewer buckets than there are cores (the hot-bucket case),
+        # each bucket splits into enough slices to keep every core writing
+        # (capped at 8 to bound file counts) instead of serializing the
+        # rewrite on one task per bucket.
+        par = self.spark.sparkContext.defaultParallelism
+        slices = max(1, min(8, par // len(touched)))
+        written = self._write_buckets(merged, new_version, touched, slices)
+        self._commit_snapshot(
+            man, written, touched, {"committed_at": time.time()}, batch_id, query_id,
+            schema=new_schema.json(),
+        )
         return MergeResult(
             True, new_version, batch_id, touched, {"buckets_rewritten": len(touched)}
         )
+
+    def _write_buckets(
+        self, df: DataFrame, version: int, buckets: list[int], slices: int
+    ) -> dict[str, str]:
+        """The one copy-on-write writer: ``df`` (carrying ``_bucket``, every
+        value in ``buckets``) becomes snapshot dir ``data/v{version}``, one
+        ``_bucket=b`` dir per bucket. With ``slices > 1`` a key-salted
+        ``_slice`` spreads each bucket over up to that many writer tasks and
+        files (slices reach tasks by hash, so two can share one); otherwise
+        each bucket is one task and one file. Returns
+        ``{bucket: rel_dir}`` for the bucket dirs actually written — a bucket
+        whose rows all vanished has none."""
+        rel_dir = os.path.join(_DATA, f"v{version:012d}")
+        out_dir = os.path.join(self.path, rel_dir)
+        if slices > 1:
+            df = (
+                df.withColumn(
+                    "_slice",
+                    F.pmod(F.xxhash64(F.lit("_slice"), *self.key_cols), F.lit(slices)),
+                )
+                .repartition(len(buckets) * slices, "_bucket", "_slice")
+                .drop("_slice")
+            )
+        else:
+            df = df.repartition(len(buckets), "_bucket")
+        df.write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
+        return {
+            d.split("=", 1)[1]: os.path.join(rel_dir, d)
+            for d in os.listdir(out_dir)
+            if d.startswith("_bucket=")
+        }
+
+    def _commit_snapshot(
+        self,
+        man: dict[str, Any],
+        written: dict[str, str],
+        rewritten: list[int],
+        stats: dict[str, Any],
+        batch_id: int | None = None,
+        query_id: str = "default",
+        schema: str | None = None,
+    ) -> int:
+        """Commit the manifest that follows ``man``: untouched buckets carry
+        forward by reference, each rewritten bucket points at its new dir in
+        ``written`` or, when none was written (every row gone), is dropped.
+        ``batch_id`` advances the ``query_id`` fencing watermark. Returns the
+        committed version."""
+        buckets = dict(man["buckets"])
+        for b in map(str, rewritten):
+            if b in written:
+                buckets[b] = written[b]
+            else:
+                buckets.pop(b, None)
+        watermarks = dict(man["watermarks"])
+        if batch_id is not None:
+            watermarks[query_id] = batch_id
+        version = int(man["version"]) + 1
+        self._commit(
+            {
+                "version": version,
+                "parent": man["version"],
+                "schema": man["schema"] if schema is None else schema,
+                "buckets": buckets,
+                "watermarks": watermarks,
+                "stats": stats,
+            }
+        )
+        return version
 
     # ---------- maintenance ----------
 
     def overwrite(self, df: DataFrame) -> MergeResult:
         """CLOBBER strategy (full refresh) — the reference's deleteAndCopy
         (RedshiftJdbcClient.java:162-198) / truncate-on-empty (:205-219)."""
-        cur_version = self.current_version()
-        new_version = cur_version + 1
-        rel_dir = os.path.join(_DATA, f"v{new_version:012d}")
-        out_dir = os.path.join(self.path, rel_dir)
+        man = self._manifest(self.current_version())
+        new_version = int(man["version"]) + 1
         schema = T.StructType([f for f in df.schema.fields if f.name != self.op_col])
         with_bucket = (
             df.drop(self.op_col)
             .withColumn("_version", F.lit(new_version))
             .withColumn("_bucket", self._bucket_expr())
         )
-        with_bucket.repartition(self.num_buckets, "_bucket").write.mode(
-            "overwrite"
-        ).partitionBy("_bucket").parquet(out_dir)
-        buckets = {
-            d.split("=", 1)[1]: os.path.join(rel_dir, d)
-            for d in os.listdir(out_dir)
-            if d.startswith("_bucket=")
-        }
-        man = self._manifest(cur_version)
-        self._commit(
-            {
-                "version": new_version,
-                "parent": cur_version,
-                "schema": schema.json(),
-                "buckets": buckets,
-                "watermarks": {**man["watermarks"]},
-                "stats": {"clobber": True},
-            }
+        every = list(range(self.num_buckets))
+        written = self._write_buckets(with_bucket, new_version, every, 1)
+        self._commit_snapshot(
+            {**man, "buckets": {}}, written, every, {"clobber": True},
+            schema=schema.json(),
         )
-        return MergeResult(True, new_version, None, sorted(int(b) for b in buckets), {})
+        return MergeResult(True, new_version, None, sorted(int(b) for b in written), {})
 
     def compact(self, max_files_per_bucket: int = 1) -> MergeResult:
         """Small-file compaction (Iceberg: rewrite_data_files). Hot-bucket
         write slicing and repeated merges can leave several part files per
         bucket; compaction rewrites any bucket exceeding
-        ``max_files_per_bucket`` into that many files and commits a new
-        snapshot. Row content — including tombstones and the per-row
+        ``max_files_per_bucket`` into at most that many files and commits a
+        new snapshot. Row content — including tombstones and the per-row
         ``_version`` change-feed stamps — is preserved byte-for-byte, so
         ``read_changes`` across a compaction emits NOTHING for compacted
         buckets (pointer moved, stamps did not). Untouched buckets carry
@@ -506,40 +497,12 @@ class ParquetLakeTable:
         if not needs:
             return MergeResult(False, cur_version, None, [], {"compacted": 0})
         df = self.read(version=cur_version, buckets=needs, include_tombstones=True)
-        new_version = cur_version + 1
-        rel_dir = os.path.join(_DATA, f"v{new_version:012d}")
-        out_dir = os.path.join(self.path, rel_dir)
-        bucketed = df.withColumn("_bucket", self._bucket_expr())
-        if max_files_per_bucket > 1:
-            # repartition(n, "_bucket") alone hashes ALL of a bucket's rows into
-            # one partition — the >1 contract needs the same key-salted _slice
-            # the merge writer uses to spread one bucket across several files.
-            writer = (
-                bucketed.withColumn(
-                    "_slice",
-                    F.pmod(
-                        F.xxhash64(F.lit("_slice"), *self.key_cols),
-                        F.lit(max_files_per_bucket),
-                    ),
-                )
-                .repartition(len(needs) * max_files_per_bucket, "_bucket", "_slice")
-                .drop("_slice")
-            )
-        else:
-            writer = bucketed.repartition(len(needs), "_bucket")
-        writer.write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
-        new_buckets = dict(man["buckets"])
-        for b in needs:
-            new_buckets[str(b)] = os.path.join(rel_dir, f"_bucket={b}")
-        self._commit(
-            {
-                "version": new_version,
-                "parent": cur_version,
-                "schema": man["schema"],
-                "buckets": new_buckets,
-                "watermarks": {**man["watermarks"]},
-                "stats": {"compacted_buckets": len(needs)},
-            }
+        written = self._write_buckets(
+            df.withColumn("_bucket", self._bucket_expr()),
+            cur_version + 1, needs, max_files_per_bucket,
+        )
+        new_version = self._commit_snapshot(
+            man, written, needs, {"compacted_buckets": len(needs)}
         )
         return MergeResult(True, new_version, None, needs, {"compacted": len(needs)})
 

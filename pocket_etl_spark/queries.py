@@ -18,6 +18,12 @@ partial-agg-friendly shapes, no driver-side loops).
 
 from __future__ import annotations
 
+import atexit
+import functools
+import shutil
+import tempfile
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -26,6 +32,34 @@ from pocket_etl_spark.functions import DEC, cosine_sim, davg, dsum, md5_long
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+# Query-side artifacts (the change-feed staging table, the IVF index) are table
+# maintenance, not query time: each is built once per (query, sf) per process,
+# into one scratch root that is private to the process and removed at exit.
+_BUILDS: dict[tuple[str, str], str] = {}
+
+
+@functools.cache
+def scratch_root() -> str:
+    """The process's scratch root, created on first use under
+    ``tempfile.gettempdir()`` (so a caller's ``TMPDIR`` decides where it lives)
+    and removed when the interpreter exits."""
+    root = tempfile.mkdtemp(prefix="pocket_etl_scratch_", dir=tempfile.gettempdir())
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def scratch_build(query: str, sf: str, build: Callable[[str], None]) -> str:
+    """Path of the one build of ``query``'s artifact for ``sf``: on the first
+    call ``build(path)`` fills a fresh directory under ``scratch_root()``;
+    later calls return the same path."""
+    key = (query, sf)
+    if key not in _BUILDS:
+        path = tempfile.mkdtemp(prefix=f"{query}_", dir=scratch_root())
+        build(path)
+        _BUILDS[key] = path
+    return _BUILDS[key]
 
 
 # ---------------------------------------------------------------------------
@@ -421,54 +455,23 @@ def q_cdc_change_feed(spark, sf):
     oracle states that set and each key's overall winner directly in SQL;
     tombstones surface as _change_type='delete' with the delete's payload.
     Unique event_ids make every argmax tie-free, so both sides are exact.
-
-    The staging table lives at ONE deterministic tempdir path per
-    (sf, lake-code fingerprint) — VERDICT r4 wrong #2: the old per-process
-    uuid path leaked a table per run. The fingerprint (md5 of lake.py) keys
-    the cache to the merge machinery's source, so a code change rebuilds
-    instead of replaying a stale artifact built by a previous revision; old
-    fingerprints' tables are pruned, keeping back-to-back runs at ≤1 table
-    per sf. Rebuilds happen in a private scratch dir then atomically
-    os.rename onto the shared path (manifests store relative bucket paths,
-    so the table is relocatable) — concurrent processes never interleave
-    commits into the same half-built table; the loser discards its scratch."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    import pocket_etl_spark.lake as _lake_mod
+    The staged table is built once per process (``scratch_build``)."""
     from pocket_etl_spark.lake import ParquetLakeTable
 
-    ev = t(spark, sf, "events").select(
-        "user_id",
-        F.col("event_id").alias("lsn"),
-        F.when(F.col("event_type") == "error", F.lit("D")).otherwise(F.lit("U")).alias("op"),
-        "event_type",
-        "value",
-    )
-    with open(_lake_mod.__file__, "rb") as fh:
-        code_tag = hashlib.md5(fh.read()).hexdigest()[:8]
-    base = tempfile.gettempdir()
-    prefix = f"pocket_etl_feed_{os.path.basename(sf.rstrip('/'))}_"
-    path = os.path.join(base, prefix + code_tag)
-    table = ParquetLakeTable(spark, path, key_cols=["user_id"], num_buckets=8)
-    if table.current_version() != 2:  # absent, half-built, or stale fingerprint
-        scratch = tempfile.mkdtemp(prefix=prefix + "build_", dir=base)
-        build = ParquetLakeTable(spark, scratch, key_cols=["user_id"], num_buckets=8)
-        build.merge(ev.filter(F.col("lsn") % 2 == 0), batch_id=0)
-        build.merge(ev.filter(F.col("lsn") % 2 == 1), batch_id=1)
-        shutil.rmtree(path, ignore_errors=True)  # clear half-built remnants
-        try:
-            os.rename(scratch, path)  # atomic claim; fails if a racer won
-        except OSError:
-            shutil.rmtree(scratch, ignore_errors=True)
-        for d in os.listdir(base):  # prune tables built by older lake.py revisions
-            stale_tag = d.startswith(prefix) and "build_" not in d and d != prefix + code_tag
-            legacy = d == prefix.rstrip("_")  # pre-fingerprint layout
-            if stale_tag or legacy:
-                shutil.rmtree(os.path.join(base, d), ignore_errors=True)
+    def build(path: str) -> None:
+        ev = t(spark, sf, "events").select(
+            "user_id",
+            F.col("event_id").alias("lsn"),
+            F.when(F.col("event_type") == "error", F.lit("D")).otherwise(F.lit("U")).alias("op"),
+            "event_type",
+            "value",
+        )
         table = ParquetLakeTable(spark, path, key_cols=["user_id"], num_buckets=8)
+        table.merge(ev.filter(F.col("lsn") % 2 == 0), batch_id=0)
+        table.merge(ev.filter(F.col("lsn") % 2 == 1), batch_id=1)
+
+    path = scratch_build("cdc_change_feed", sf, build)
+    table = ParquetLakeTable(spark, path, key_cols=["user_id"], num_buckets=8)
     return table.read_changes(1).select(
         "user_id",
         F.col("lsn").alias("last_lsn"),
@@ -574,33 +577,19 @@ def q_ann_ivf(spark, sf):
     )
 
 
-# Materialized-IVF index cache: one build per (process, sf). The path carries a
-# per-process uuid so two concurrent harness runs on the same sf can never race
-# on a shared directory, and repeat invocations within a run don't re-charge the
-# index build to the "query" (the build is table maintenance, not query time).
-_IVF_INDEX_CACHE: dict[str, str] = {}
-
-
 def q_ann_ivf_indexed(spark, sf):
     """IVF top-3 against the MATERIALIZED index (cell-partitioned parquet,
     operators/similarity.ivf_write_index + ivf_topk_indexed): probe scan prunes
     on the cell partition column — the storage layout for 10^9 vectors. Must
-    return exactly what the in-memory ivf path returns (same oracle)."""
-    import os
-    import tempfile
-    import uuid
-
+    return exactly what the in-memory ivf path returns (same oracle). The
+    index is built once per process (``scratch_build``)."""
     from pocket_etl_spark.operators.similarity import ivf_topk_indexed, ivf_write_index
 
     e = t(spark, sf, "embeddings")
-    idx = _IVF_INDEX_CACHE.get(sf)
-    if idx is None:
-        idx = os.path.join(
-            tempfile.gettempdir(),
-            f"ivf_idx_{os.path.basename(sf.rstrip('/'))}_{uuid.uuid4().hex[:12]}",
-        )
-        ivf_write_index(e.filter("vec_id >= 9"), e.filter("vec_id < 4"), idx)
-        _IVF_INDEX_CACHE[sf] = idx
+    idx = scratch_build(
+        "ann_ivf_indexed", sf,
+        lambda path: ivf_write_index(e.filter("vec_id >= 9"), e.filter("vec_id < 4"), path),
+    )
     return ivf_topk_indexed(
         spark, idx, e.filter("vec_id between 4 and 8"), e.filter("vec_id < 4"),
         k=3, n_probe=2,

@@ -201,21 +201,29 @@ def test_merge_into_sql_shape():
     assert "s.lsn = t.lsn AND (NOT t._deleted OR s.op = 'D')" in sql
 
 
+def _bucket_files(table_path, version, bucket=0):
+    d = os.path.join(table_path, "data", f"v{version:012d}", f"_bucket={bucket}")
+    return sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
+
+
+# One touched bucket under the session's local[8]: the auto rule gives
+# min(8, 8 // 1) = 8 key-salted slices. The write hash-partitions
+# (_bucket, _slice) into 8 shuffle partitions, and the hash sends the 8
+# pairs to only 6 of them, so the rewrite runs on 6 writer tasks (6 files).
+HOT_BUCKET_FILES = 6
+
+
 def test_hot_bucket_write_splits_into_file_slices(spark, tmp_table_path):
-    """With one touched bucket, files_per_bucket > 1 must fan the rewrite out
-    across several writer tasks (multiple part files in the bucket dir) while
+    """With one touched bucket, the auto slice rule must fan the rewrite out
+    across several writer tasks (several part files in the bucket dir) while
     the merged state stays correct — the hot-bucket write-parallelism fix."""
-    table = ParquetLakeTable(
-        spark, tmp_table_path, num_buckets=1, files_per_bucket=4
-    )
+    assert spark.sparkContext.defaultParallelism == 8
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=1)
     ev = _events(spark, n=2000, keys=400).drop("ts", "extras")
     res = table.merge(ev, batch_id=0)
     assert res.touched_buckets == [0]
-    bucket_dir = os.path.join(
-        tmp_table_path, "data", f"v{res.version:012d}", "_bucket=0"
-    )
-    parts = [f for f in os.listdir(bucket_dir) if f.endswith(".parquet")]
-    assert len(parts) >= 2, parts  # hot bucket no longer a single writer
+    parts = _bucket_files(tmp_table_path, res.version)
+    assert len(parts) == HOT_BUCKET_FILES, parts  # hot bucket no longer a single writer
     # correctness unchanged: one row per live key
     got = table.read()
     assert got.groupBy("repo", "path").count().filter("count > 1").count() == 0
@@ -302,32 +310,45 @@ def test_change_data_feed_incremental_consumption(spark, tmp_table_path):
 
 
 def test_compaction_preserves_state_and_change_feed(spark, tmp_table_path):
-    """compact() rewrites multi-file buckets into one file per bucket without
-    changing any row: snapshot identical, and read_changes across the
-    compaction emits nothing (pointer moved, per-row stamps did not)."""
-    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=1, files_per_bucket=4)
+    """compact() rewrites buckets holding more than max_files_per_bucket files
+    without changing any row: snapshot identical, and read_changes across the
+    compaction emits nothing (pointer moved, per-row stamps did not). Covers
+    both writer branches: key-salted slices (max 2) and one file per bucket
+    (max 1)."""
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=1)
     ev = _events(spark, n=1000, keys=100).drop("ts", "extras")
     table.merge(ev, batch_id=0)
     v1 = table.current_version()
-    man_rel = f"data/v{v1:012d}/_bucket=0"
-    n_before = len([f for f in os.listdir(os.path.join(tmp_table_path, man_rel)) if f.endswith(".parquet")])
-    assert n_before >= 2  # slicing produced the small files to compact
+    assert len(_bucket_files(tmp_table_path, v1)) == HOT_BUCKET_FILES
     before = sorted(map(tuple, table.read().collect()))
 
-    res = table.compact(max_files_per_bucket=1)
+    res = table.compact(max_files_per_bucket=2)
     assert res.committed and res.stats["compacted"] == 1
-    new_rel = f"data/v{res.version:012d}/_bucket=0"
-    n_after = len([f for f in os.listdir(os.path.join(tmp_table_path, new_rel)) if f.endswith(".parquet")])
-    assert n_after == 1
+    # Two salted slices hash-partitioned into 2 shuffle partitions: both land
+    # in the same one here, so the bucket compacts to ONE file, not two (the
+    # slice placement is a hash, not a bijection — ROADMAP carried item).
+    assert len(_bucket_files(tmp_table_path, res.version)) == 1
     assert sorted(map(tuple, table.read().collect())) == before
-    # change feed is silent across a compaction
     assert table.read_changes(v1).count() == 0
-    # idempotent: nothing left to compact
-    assert not table.compact(max_files_per_bucket=1).committed
-    # merges keep working on the compacted snapshot
+    v2 = table.current_version()
+
+    # a bucket already within the bound is left alone
+    assert not table.compact(max_files_per_bucket=2).committed
+    # force the max-1 branch over a multi-file bucket: merge again (8 slices)
     more = _events(spark, n=50, keys=10, seed=8).drop("ts", "extras")
     table.merge(more, batch_id=1)
-    assert table.read().count() > 0
+    v3 = table.current_version()
+    assert len(_bucket_files(tmp_table_path, v3)) == HOT_BUCKET_FILES
+    before = sorted(map(tuple, table.read().collect()))
+    res = table.compact(max_files_per_bucket=1)
+    assert res.committed and res.stats["compacted"] == 1
+    assert len(_bucket_files(tmp_table_path, res.version)) == 1
+    assert sorted(map(tuple, table.read().collect())) == before
+    # change feed is silent across a compaction
+    assert table.read_changes(v3).count() == 0
+    assert table.read_changes(v2).count() == table.read_changes(v2, v3).count()
+    # idempotent: nothing left to compact
+    assert not table.compact(max_files_per_bucket=1).committed
 
 
 import pytest as _pytest
@@ -429,28 +450,6 @@ def test_cursor_concurrent_commits_do_not_rewind(tmp_path):
         t.join()
     for c in cursors:
         assert c.position() == n_commits, c.consumer_id
-
-
-def test_stamps_off_merges_correctly_and_refuses_feed(spark, tmp_path):
-    """stamps=False drops the per-row _version plumbing (merge cost knob for
-    tables nobody tails); state stays identical to a stamped table, and
-    read_changes refuses instead of returning wrong windows."""
-    from pocket_etl_spark.datagen import gen_change_events
-
-    events = gen_change_events(spark, n_events=800, n_keys=60, seed=11).drop("ts", "extras")
-    on = ParquetLakeTable(spark, str(tmp_path / "on"), num_buckets=4)
-    off = ParquetLakeTable(spark, str(tmp_path / "off"), num_buckets=4, stamps=False)
-    for i, (lo, hi) in enumerate([(1, 400), (401, 800)]):
-        b = events.filter((events.lsn >= lo) & (events.lsn <= hi))
-        on.merge(b, batch_id=i)
-        off.merge(b, batch_id=i)
-    import pytest
-
-    a = sorted(map(tuple, on.read().drop("_version").collect()))
-    b = sorted(map(tuple, off.read().drop("_version").collect()))
-    assert a == b and len(a) > 0
-    with pytest.raises(ValueError, match="stamps"):
-        off.read_changes(0)
 
 
 def test_read_changes_window_is_stable_across_later_commits(spark, tmp_path):

@@ -5,7 +5,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from pocket_etl_spark.cdc.dedupe import detect_hot_keys, lww_dedupe, lww_dedupe_window
+from pocket_etl_spark.cdc.dedupe import lww_dedupe, lww_dedupe_window
 from pocket_etl_spark.datagen import gen_change_events, with_duplicates_and_ties
 
 
@@ -27,12 +27,59 @@ def test_dedupe_variants_agree(spark):
     pd.testing.assert_frame_equal(a, b)
 
 
-def test_hot_key_detection(spark):
-    events = gen_change_events(spark, 3000, 200, seed=13, hot_key_fraction=0.5)
-    hot = detect_hot_keys(events, ["repo", "path"], threshold_fraction=0.2)
-    assert len(hot) == 1  # exactly the injected hot key
-    repo, path = hot[0]
-    assert repo == "org/repo-00000"
+def test_apply_lineage_matches_pandas_oracle(spark, tmp_path):
+    """apply_batch(lineage=True) on a skewed two-batch log with bad-op rows:
+    per batch, the ApplyResult counters, the hot keys and every figure of the
+    lineage document equal a pandas computation over the same rows."""
+    import json
+
+    from pocket_etl_spark.cdc.apply import apply_batch
+    from pocket_etl_spark.lake import ParquetLakeTable
+
+    table = ParquetLakeTable(spark, str(tmp_path / "t"), num_buckets=4)
+    events = gen_change_events(spark, 3000, 200, seed=13, hot_key_fraction=0.5).withColumn(
+        "op",
+        F.when(F.col("lsn") % 50 == 0, F.lit("X"))
+        .when(F.col("lsn") % 77 == 0, F.lit(None))
+        .otherwise(F.col("op")),
+    )
+    keys = ["repo", "path"]
+    for i, (lo, hi) in enumerate([(1, 1500), (1501, 3000)]):
+        batch = events.filter(f"lsn between {lo} and {hi}")
+        res = apply_batch(batch, table, batch_id=i, dlq_path=str(tmp_path / "dlq"), lineage=True)
+
+        pdf = batch.withColumn("_bucket", table._bucket_expr()).select(
+            *keys, "lsn", "op", "_bucket"
+        ).toPandas()
+        ok = pdf["op"].isin(["I", "U", "D"])
+        good = pdf[ok]
+        per_key = good.groupby(keys).size()
+        cutoff = max(1, int(len(good) * 0.05))
+        want_hot = set(per_key[per_key > cutoff].index)
+        assert [k[0] for k in want_hot] == ["org/repo-00000"]  # the injected hot key
+
+        assert res.rows_in == len(good)
+        assert res.rows_bad == int((~ok).sum()) > 0
+        assert res.rows_applied == len(per_key)
+        assert set(res.hot_keys) == want_hot
+
+        with open(res.lineage_path) as f:
+            doc = json.load(f)
+        assert doc["batch_id"] == i and doc["committed"]
+        assert doc["rows_bad"] == res.rows_bad
+        assert {tuple(k) for k in doc["hot_keys"]} == want_hot
+        assert doc["op_counts"] == good.groupby("op").size().to_dict()
+        want_buckets = {
+            int(b): {
+                "rows": len(g),
+                "min_lsn": int(g["lsn"].min()),
+                "max_lsn": int(g["lsn"].max()),
+                "deletes": int((g["op"] == "D").sum()),
+            }
+            for b, g in good.groupby("_bucket")
+        }
+        got_buckets = {r.pop("_bucket"): r for r in doc["buckets"]}
+        assert got_buckets == want_buckets
 
 
 def test_lsh_recovers_all_same_bucket_neighbors(spark):

@@ -34,3 +34,36 @@ def test_query_matches_oracle(spark, name):
     want = duckdb_oracle(sql, SF_DIR)
     problems = compare_frames(got, want)
     assert not problems, f"{name}: {problems}"
+
+
+def test_scratch_root_lives_under_tmpdir_and_is_removed_at_exit(tmp_path):
+    """The query-side build cache: in a process that starts no Spark, the
+    scratch root is created under the process's TMPDIR, holds one memoised
+    build per (query, sf) while the process runs, and is gone after exit."""
+    import subprocess
+    import sys
+
+    code = """
+import os
+from pyspark import SparkContext
+from pocket_etl_spark.queries import scratch_build, scratch_root
+
+def build(d):
+    open(os.path.join(d, "artifact"), "w").close()
+
+p = scratch_build("q", "sf", build)
+assert scratch_build("q", "sf", None) == p  # memoised: no second build
+assert scratch_build("q", "other_sf", build) != p
+assert os.path.dirname(p) == scratch_root()
+assert os.path.isfile(os.path.join(p, "artifact"))
+assert SparkContext._active_spark_context is None
+print(scratch_root())
+"""
+    env = {**os.environ, "TMPDIR": str(tmp_path), "PYTHONPATH": REPO}
+    out = subprocess.run(
+        [sys.executable, "-c", code], env=env, capture_output=True, text=True, timeout=120
+    )
+    assert out.returncode == 0, out.stderr
+    root = out.stdout.strip().splitlines()[-1]
+    assert os.path.dirname(root) == str(tmp_path)
+    assert not os.path.exists(root)
